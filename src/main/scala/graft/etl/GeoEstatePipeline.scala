@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,16 +66,20 @@ object GeoEstatePipeline {
       .withColumn("latitude_s", cleanNumeric(col("latitude_raw"), KeepSignedNumeric))
       .withColumn("longitude_s", cleanNumeric(col("longitude_raw"), KeepSignedNumeric))
 
-  /** Validity predicate over the cleaned columns (reference task 2 part 2). */
-  def isValidHouse: org.apache.spark.sql.Column =
-    validDouble(col("square_s")) &&
-      validYear(col("year_s")) &&
-      validInt(col("population_s")) &&
-      validCoord(col("latitude_s")) &&
-      validCoord(col("longitude_s")) &&
-      isNotEmpty(col("region")) &&
-      isNotEmpty(col("locality_name")) &&
-      isNotEmpty(col("address"))
+  /** The validity rules over the cleaned columns (reference task 2 part 2),
+    * each named by the input column it checks. */
+  def validityRules: Seq[(String, Column)] = Seq(
+    "square" -> validDouble(col("square_s")),
+    "maintenance_year" -> validYear(col("year_s")),
+    "population" -> validInt(col("population_s")),
+    "latitude" -> validCoord(col("latitude_s")),
+    "longitude" -> validCoord(col("longitude_s")),
+    "region" -> isNotEmpty(col("region")),
+    "locality_name" -> isNotEmpty(col("locality_name")),
+    "address" -> isNotEmpty(col("address")))
+
+  /** Validity predicate: every rule of [[validityRules]] holds. */
+  def isValidHouse: Column = validityRules.map(_._2).reduce(_ && _)
 
   /** Clean + validate: the reference's `validate_data` output, pre-cast. */
   def validated(dirty: DataFrame): DataFrame =
@@ -124,23 +128,40 @@ object GeoEstatePipeline {
   def housesUnindexed(spark: SparkSession, dir: String): DataFrame =
     typedUnindexed(validated(dirtyHouses(spark, dir)))
 
+  /** The reference file's columns in file order, all text: the cleaning
+    * stage types them (`cleanNumeric` regexes over the raw text, then
+    * `cast`). Also the sink table's column set (main.py:415).
+    */
+  val CsvSchema: StructType = StructType(Seq(
+    "house_id", "latitude", "longitude", "maintenance_year", "square",
+    "population", "region", "locality_name", "address", "full_address",
+    "communal_service_id", "description").map(StructField(_, StringType)))
+
   /** The REAL input path: the reference's UTF-16 multiline CSV
     * (main.py:149-168 column set) through the same clean → validate →
     * reindex → cast plan. Column values arrive with unit suffixes,
     * non-breaking-space thousands separators ("3 078.30") and free-text
     * garbage — all handled by the same regex cleaning the derived-table
     * variant exercises under the DuckDB oracle.
+    *
+    * The input is read under [[CsvSchema]], the text the cleaning regexes
+    * expect, not with the reference's `inferSchema` (which stays only as
+    * `CsvSource`'s no-schema default): building the plan starts no Spark
+    * job, each action scans the CSV once, and a file whose header does not
+    * name the declared columns fails the read instead of being loaded by
+    * position.
     */
-  def fromCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = graft.sources.CsvSource.read(spark, path)
-    val prepared = raw.select(
+  def fromCsv(spark: SparkSession, path: String): DataFrame =
+    cleanValidateCast(csvDirty(graft.sources.CsvSource.read(spark, path, schema = Some(CsvSchema))))
+
+  /** The CSV's columns under the names [[cleaned]] reads. */
+  def csvDirty(raw: DataFrame): DataFrame =
+    raw.select(
       col("house_id").cast(LongType).as("src_id"),
-      cleanNumeric(col("square").cast(StringType), KeepNumericDot).as("square_s"),
-      cleanNumeric(col("maintenance_year").cast(StringType), KeepDigits).as("year_s"),
-      cleanNumeric(col("population").cast(StringType), KeepDigits).as("population_s"),
-      cleanNumeric(col("latitude").cast(StringType), KeepSignedNumeric).as("latitude_s"),
-      cleanNumeric(col("longitude").cast(StringType), KeepSignedNumeric).as("longitude_s"),
+      col("square").as("square_raw"),
+      col("maintenance_year").as("year_raw"),
+      col("population").as("population_raw"),
+      col("latitude").as("latitude_raw"),
+      col("longitude").as("longitude_raw"),
       col("region"), col("locality_name"), col("address"))
-    typed(prepared.filter(isValidHouse))
-  }
 }

@@ -1,11 +1,21 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class EtlSpec extends SparkSpec {
   import spark.implicits._
+
+  private val csvHeader = GeoEstatePipeline.CsvSchema.fieldNames.toSeq
+
+  /** One UTF-16 file (with a BOM, like the reference's) under `dir`. */
+  private def utf16Csv(dir: Path, name: String, lines: Seq[String]): Unit =
+    Files.write(dir.resolve(name), lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_16))
 
   test("cleanNumeric strips everything but the kept character class") {
     val df = Seq(("  123.45 м²  ", " 1980 г. ", " -55.7558° ")).toDF("sq", "yr", "lat")
@@ -213,6 +223,35 @@ class EtlSpec extends SparkSpec {
     assert(top.length === 25)
     assert(top.take(3).map(_._1) === Seq(301445L, 528953L, 523014L))
     assert(top.head._2 === 270929.0)
+  }
+
+  test("fromCsv keeps an all-numeric column's digits (no double round-trip before the regex)") {
+    val dir = Files.createTempDirectory("graft_csv_numeric")
+    utf16Csv(dir, "h.csv", Seq(csvHeader.mkString(","),
+      "1,55.755800,37.617300,1985,12000000,120,Москва,Москва,ул. Ленина,Москва,1,дом",
+      "2,55.751200,37.618400,1972,54.5,45,Москва,Москва,ул. Мира,Москва,2,дом"))
+    val squares = GeoEstatePipeline.fromCsv(spark, dir.toString)
+      .orderBy("src_id").select("square").as[Double].collect().toSeq
+    // Under the former inferring read, every value of `square` parsed, so the
+    // column was inferred as double and went back to text through
+    // cast(StringType) before the regex: 12000000 was re-spelled "1.2E7" and
+    // cleaned to "1.27", so the row came back with square = 1.27.
+    assert(squares === Seq(12000000.0, 54.5))
+  }
+
+  test("fromCsv fails on a file whose header swaps two columns instead of mislabeling it") {
+    val dir = Files.createTempDirectory("graft_csv_drift")
+    utf16Csv(dir, "a.csv", Seq(csvHeader.mkString(","),
+      "1,55.755800,37.617300,1985,54.20,120,Москва,Химки,ул. Ленина,Москва,1,дом"))
+    val swapped = csvHeader.updated(6, "locality_name").updated(7, "region")
+    utf16Csv(dir, "b.csv", Seq(swapped.mkString(","),
+      "2,55.755800,37.617300,1985,54.20,120,Химки,Москва,ул. Ленина,Москва,1,дом"))
+    // the well-formed file alone reads fine
+    assert(GeoEstatePipeline.fromCsv(spark, dir.resolve("a.csv").toString)
+      .select("region").as[String].collect().toSeq === Seq("Москва"))
+    // read by position, b.csv would put "Химки" under region; the header check refuses it
+    val e = intercept[SparkException](GeoEstatePipeline.fromCsv(spark, dir.toString).collect())
+    assert(e.getMessage.contains("FAILED_READ_FILE"), e.getMessage)
   }
 
   test("GeoEstatePipeline: every valid row survives with usable types") {

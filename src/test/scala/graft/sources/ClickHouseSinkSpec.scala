@@ -18,10 +18,7 @@ class ClickHouseSinkSpec extends SparkSpec {
 
   System.setProperty("derby.system.home", System.getProperty("java.io.tmpdir"))
 
-  private val geoColumns = Seq(
-    "house_id", "latitude", "longitude", "maintenance_year", "square",
-    "population", "region", "locality_name", "address", "full_address",
-    "communal_service_id", "description")
+  private val geoColumns = graft.etl.GeoEstatePipeline.CsvSchema.fieldNames.toSeq
 
   test("ClickHouse statement text matches the reference loader exactly") {
     val d = ClickHouseSink.ClickHouseDialect
