@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Evidence tool (round 20, VERDICT r19 item 5): per-micro-batch duration
@@ -12,10 +11,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Usage: `sbt "runMain graft.StreamProfile q_stream_window[,q_x...]"`.
   */
 object StreamProfile {
-  // global sink: the drains run on s.newSession(), whose fresh
-  // StreamingQueryManager does NOT inherit addListener registrations —
-  // but spark.sql.streaming.streamingQueryListeners (a conf, read at
-  // session-state build) instantiates [[ProgressTap]] in EVERY session.
   val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   class ProgressTap extends StreamingQueryListener {
@@ -37,19 +32,12 @@ object StreamProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.StreamProfile$ProgressTap")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the drains run on s.newSession(), whose StreamingQueryManager does
+    // not see spark.streams.addListener registrations; the static conf,
+    // read from the system properties when the context starts,
+    // instantiates [[ProgressTap]] in EVERY session
+    sys.props("spark.sql.streaming.streamingQueryListeners") = classOf[ProgressTap].getName
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val names = args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     names.foreach { name =>
